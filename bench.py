@@ -170,7 +170,7 @@ def main() -> None:
     #      run on the SAME query makes any burst symmetric in the ratio.
     #   2. Locality: full round-robin over all 17 queries re-faults the
     #      page cache / JIT profile the other queries evicted (~40% worse,
-    #      measured — tools/bench_interleaved.py docstring).  Alternating
+    #      measured — tools/focused_ab.py docstring).  Alternating
     #      engines WITHIN one query keeps its data hot (both engines read
     #      the same parquet pages).
     def timed_run(name: str) -> float:

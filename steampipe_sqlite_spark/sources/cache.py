@@ -145,6 +145,13 @@ class ScanCache:
         self.hits += 1
         return entry.batches
 
+    def budget(self, conn_max_bytes: int | None) -> int:
+        """Largest entry put() admits: the process budget, tightened by a
+        connection's ``cache_max_size_mb`` override."""
+        if conn_max_bytes is None:
+            return self.max_bytes
+        return min(self.max_bytes, conn_max_bytes)
+
     def put(
         self,
         key: tuple,
@@ -160,7 +167,7 @@ class ScanCache:
             return
         ttl = min(ttl_s, cache_max_ttl_s()) if ttl_s is not None else self.ttl_s
         nbytes = sum(b.nbytes for b in batches)
-        if nbytes > (self.max_bytes if conn_max_bytes is None else min(self.max_bytes, conn_max_bytes)):
+        if nbytes > self.budget(conn_max_bytes):
             return
         if key in self._data:
             self._evict(key)

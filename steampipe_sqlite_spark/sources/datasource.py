@@ -48,6 +48,7 @@ from pyspark.sql.types import StructType
 
 from steampipe_sqlite_spark.sources.cache import (
     ScanCache,
+    cache_enabled,
     connection_cache_options,
     serve_from_superset,
 )
@@ -337,7 +338,7 @@ class ConnectorReader(DataSourceReader):
         conn_enabled, conn_ttl, conn_max_bytes = connection_cache_options(
             self.connector.config
         )
-        if conn_enabled is False:
+        if conn_enabled is False or not cache_enabled():
             # caching and retries are orthogonal in the reference SDK:
             # cache=false skips only the get/put/subsumption steps, the
             # RetryHydrate backoff still applies (ADVICE r3)
@@ -355,11 +356,20 @@ class ConnectorReader(DataSourceReader):
             batches, residual, cols = superset
             yield from serve_from_superset(batches, residual, cols, self.limit)
             return
-        batches = []
+        # buffer only while the scan still fits the cache budget: put()
+        # refuses a larger entry anyway, so holding its batches would pin
+        # a whole partition in the Python worker for nothing
+        budget = _SCAN_CACHE.budget(conn_max_bytes)
+        batches, nbytes = [], 0
         for batch in self._execute_retrying(part):
-            batches.append(batch)
+            nbytes += batch.nbytes
+            if nbytes <= budget:
+                batches.append(batch)
+            else:
+                batches.clear()
             yield batch
-        _SCAN_CACHE.put(key, batches, conn_ttl, conn_max_bytes)
+        if nbytes <= budget:
+            _SCAN_CACHE.put(key, batches, conn_ttl, conn_max_bytes)
 
     def _execute_retrying(self, part: Partition):
         """Throttle + execute with the connector's declared retry policy.

@@ -247,6 +247,8 @@ class PagedHttpConnector(Connector):
         limit: int | None,
         partition: Partition | None = None,
     ) -> Iterator[pa.RecordBatch]:
+        if limit == 0:  # LIMIT 0 fetches nothing (yield-then-check misses it)
+            return
         if partition is not None:
             shards = [partition.info.get("shard", partition.index)]
         else:

@@ -71,6 +71,19 @@ class TestTokenChain:
         full = list(con.execute("items", [], None, None))
         assert batches[0].column("seq").to_pylist() == full[0].column("seq").to_pylist()
 
+    def test_limit_zero_makes_no_api_call(self, tmp_path):
+        """LIMIT 0 needs no rows, so it must cost no page fetch (and no
+        throttle debit): zero batches and zero call_log lines."""
+        log = tmp_path / "calls.jsonl"
+        log.touch()
+        conn = PagedHttpConnector(
+            json.dumps({"n_partitions": 2, "n_pages": 3, "page_size": 5, "call_log": str(log)})
+        )
+        assert list(conn.execute("items", [], None, 0)) == []
+        part = conn.partitions("items", [])[0]
+        assert list(conn.execute("items", [], ["seq"], 0, part)) == []
+        assert _log(str(log)) == []
+
     def test_spark_scan_calls_equal_pages_times_partitions(self, spark, tmp_path):
         """The headline contract: a full parallel scan walks every
         partition's token chain exactly once — total fetches ==
@@ -361,6 +374,44 @@ class TestThrottleAndCache:
         again = [x for b in r.read(r.partitions()[0]) for x in b.to_pylist()]
         assert again == first
         assert len(_log(log)) == 4, "cached rescan refetched pages"
+
+    @pytest.mark.parametrize(
+        "extra, env, limit_mb",
+        [
+            # 1 MB connection budget: buffering stops at the budget
+            ({"cache_max_size_mb": 1}, None, 1.25),
+            # cache off by env: nothing is buffered at all
+            ({}, "false", 0.5),
+        ],
+        ids=["conn_budget_1mb", "env_cache_off"],
+    )
+    def test_scan_cache_never_holds_a_partition_it_cannot_keep(
+        self, monkeypatch, extra, env, limit_mb
+    ):
+        """A 20 x 2,500-row partition is ~2.3 MB of Arrow.  The reader
+        must not hold all of it just to find out at the end that the
+        cache cannot take it: the peak of live Arrow memory over the scan
+        stays near the budget (or near one batch when caching is off),
+        and no entry is cached."""
+        import pyarrow as pa
+
+        from steampipe_sqlite_spark.sources import datasource as ds
+
+        if env is not None:
+            monkeypatch.setenv("STEAMPIPE_CACHE", env)
+        conn = PagedHttpConnector(
+            json.dumps({"n_partitions": 1, "n_pages": 20, "page_size": 2500, **extra})
+        )
+        r = _reader(conn)
+        base = pa.total_allocated_bytes()
+        peak = rows = 0
+        for batch in r.read(r.partitions()[0]):
+            peak = max(peak, pa.total_allocated_bytes() - base)
+            rows += batch.num_rows
+            del batch
+        assert rows == 20 * 2500
+        assert peak < limit_mb * 2**20, f"reader held {peak / 2**20:.2f} MB"
+        assert len(ds._SCAN_CACHE._data) == 0
 
     def test_paged_table_tails_as_a_stream(self, spark):
         """The streaming face of the bridge composes with the paged

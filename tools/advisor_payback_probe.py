@@ -34,15 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.floorbound_scale_probe import build
-
-
-def _best_of(fn, n: int = 3) -> float:
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
+from tools.focused_ab import best_of
 
 
 def main() -> None:
@@ -143,7 +135,7 @@ def main() -> None:
         df = fn(spark, sf_dir)
         df.toPandas()  # warm
         built[name] = df
-        flat[name] = round(_best_of(lambda f=fn: f(spark, sf_dir).toPandas()), 3)
+        flat[name] = round(best_of(lambda f=fn: f(spark, sf_dir).toPandas()), 3)
 
     # observed walls price the benefit side in measured seconds (r14):
     # bare-count weighting treated the floor-bound 0.15 s equality trio
@@ -174,7 +166,7 @@ def main() -> None:
         for name in r["evidence"]["queries"]:
             fn = workload_fns[name]
             fn(spark, sf_dir).toPandas()  # warm over the layout
-            adv = _best_of(lambda f=fn: f(spark, sf_dir).toPandas())
+            adv = best_of(lambda f=fn: f(spark, sf_dir).toPandas())
             per_q[name] = {"flat_s": flat[name], "advised_s": round(adv, 3)}
             saved += flat[name] - adv
         measured.append({

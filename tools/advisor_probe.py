@@ -50,6 +50,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.floorbound_scale_probe import build  # noqa: E402
+from tools.focused_ab import best_of  # noqa: E402
 from steampipe_sqlite_spark.plans.registry import collect  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
 
@@ -68,15 +69,6 @@ def _orderkey_exchanges(plan: str) -> int:
         if "Exchange hashpartitioning" in line
         and ("l_orderkey" in line or "o_orderkey" in line)
     )
-
-
-def _best_of(fn, n: int = 3) -> float:
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
 
 
 def main() -> None:
@@ -101,7 +93,7 @@ def main() -> None:
         df = fn(spark, sf_dir)
         flat_pds[name] = df.toPandas()  # warm
         flat[name] = {
-            "best_s": round(_best_of(lambda: fn(spark, sf_dir).toPandas()), 3),
+            "best_s": round(best_of(lambda: fn(spark, sf_dir).toPandas()), 3),
             "orderkey_exchanges": _orderkey_exchanges(_plan(df)),
         }
 
@@ -134,7 +126,7 @@ def main() -> None:
         df = fn(spark, sf_dir)
         pd_adv = df.toPandas()  # warm over the discovered layout
         advised[name] = {
-            "best_s": round(_best_of(lambda: fn(spark, sf_dir).toPandas()), 3),
+            "best_s": round(best_of(lambda: fn(spark, sf_dir).toPandas()), 3),
             "orderkey_exchanges": _orderkey_exchanges(_plan(df)),
         }
         fp = flat_pds[name]

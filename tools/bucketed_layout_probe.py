@@ -97,6 +97,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from tools.floorbound_scale_probe import SCRATCH, build  # noqa: E402
+from tools.focused_ab import best_of  # noqa: E402
 from steampipe_sqlite_spark.operators.scale import write_bucketed  # noqa: E402
 from steampipe_sqlite_spark.plans.registry import collect  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
@@ -122,15 +123,6 @@ def _fact_join_exchanges(plan: str) -> int:
         if "Exchange hashpartitioning" in line
         and ("l_orderkey" in line or "o_orderkey" in line)
     )
-
-
-def _best_of(fn, n: int = 3) -> float:
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
 
 
 def main() -> None:
@@ -164,7 +156,7 @@ def main() -> None:
         fn = getattr(queries[name], "__wrapped__", queries[name])
         flat_df = fn(spark, sf_dir)
         flat_pds[name] = flat_df.toPandas()  # warm: codegen + page cache
-        flat_s = _best_of(lambda: fn(spark, sf_dir).toPandas())
+        flat_s = best_of(lambda: fn(spark, sf_dir).toPandas())
         plan = _executed_plan(flat_df)
         flat[name] = {
             "best_s": round(flat_s, 3),
@@ -205,12 +197,12 @@ def main() -> None:
             fn = getattr(queries[name], "__wrapped__", queries[name])
             buck_df = fn(spark, sf_dir)
             buck_pd = buck_df.toPandas()  # warm
-            buck_s = _best_of(lambda: fn(spark, sf_dir).toPandas())
+            buck_s = best_of(lambda: fn(spark, sf_dir).toPandas())
         else:
             sql_text = queries[name].__doc__
             buck_df = spark.sql(sql_text)
             buck_pd = buck_df.toPandas()  # warm
-            buck_s = _best_of(lambda: spark.sql(sql_text).toPandas())
+            buck_s = best_of(lambda: spark.sql(sql_text).toPandas())
         plan = _executed_plan(buck_df)
         bucketed[name] = {
             "best_s": round(buck_s, 3),

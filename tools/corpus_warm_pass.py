@@ -16,7 +16,10 @@ session before it is called a regression.
 
 Usage: python tools/corpus_warm_pass.py [sf_dir] [out.json] [query ...]
 Prints one JSON line {"metric": "corpus_warm_pass", "sf": ..., "walls":
-{name: sec desc-sorted}} and writes the full dict to out.json if given.
+{name: sec desc-sorted}, "errors": {name: "Type: message"}} and writes the
+full dict to out.json if given.  A query that raises reads -1.0 in
+``walls``, keeps its whole message in ``errors``, and ends its session so
+the next query starts in a fresh one.
 With explicit query names the pass times ONLY those, best-of-3 (the
 outlier re-measure mode: this box's co-tenant bursts inflate single
 readings up to ~17x — measured in-process on emb_neardup_cosine this
@@ -29,12 +32,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from steampipe_sqlite_spark.plans.registry import collect
 from steampipe_sqlite_spark.session import get_spark
+from tools.focused_ab import best_of
 
 
 def main() -> None:
@@ -44,6 +47,7 @@ def main() -> None:
     names = sys.argv[3:] or list(queries)
     reps = 3 if sys.argv[3:] else 1
     walls: dict[str, float] = {}
+    errors: dict[str, str] = {}
     spark = None
     for i, name in enumerate(names):
         if spark is None or (i and i % 50 == 0):
@@ -55,22 +59,22 @@ def main() -> None:
         try:
             spark.sparkContext.setJobDescription(f"warm-pass: {name}")
             fn(spark, sf_dir).toPandas()  # warm: construction+codegen+cache
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).toPandas()  # timed: the driver-gate action
-                best = min(best, time.perf_counter() - t0)
-            walls[name] = round(best, 3)
+            # timed: the driver-gate action
+            walls[name] = round(best_of(lambda: fn(spark, sf_dir).toPandas(), reps), 3)
+            spark.sparkContext.setJobDescription(None)
         except Exception as e:  # keep sweeping; a red here is a bug report
             walls[name] = -1.0
+            errors[name] = f"{type(e).__name__}: {e}"
             print(f"ERROR {name}: {e}", file=sys.stderr)
-        finally:
-            spark.sparkContext.setJobDescription(None)
+            # a failed query can leave broken state behind (leaked caches,
+            # a half-dead context): the next query gets a fresh session
+            spark.stop()
+            spark = None
         print(f"{i + 1}/{len(names)} {name} {walls[name]}", file=sys.stderr)
     if spark is not None:
         spark.stop()
     ordered = dict(sorted(walls.items(), key=lambda kv: -kv[1]))
-    line = {"metric": "corpus_warm_pass", "sf": sf_dir, "walls": ordered}
+    line = {"metric": "corpus_warm_pass", "sf": sf_dir, "walls": ordered, "errors": errors}
     if out_path:
         with open(out_path, "w") as f:
             json.dump(line, f, indent=1)

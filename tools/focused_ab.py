@@ -1,24 +1,40 @@
-"""Focused interleaved A/B for a handful of queries (VERDICT r11 #3).
+"""The interleaved Spark/DuckDB A/B harness: median + MAD per engine per query.
 
-The full interleaved harness (tools/bench_interleaved.py) answers "did the
-headline set move"; THIS answers "did query X's engine leg move" with the
-highest signal the box allows: DuckDB noise sentinels bracket the run (so a
-reading can be rejected as contended before anyone argues from it), each
-query gets warm pairs then N engine-alternating timed pairs, and the output
-carries median + MAD per leg.  This is the exact pattern that attributed
-mm_image_decode's r10 contract-bench drift to window load (BASELINE.md
-round-11 section); generalized so the next drifting query costs one command
-instead of a bespoke script.
+With no query names it answers "did the headline set (bench.HEADLINE)
+move"; with names it answers "did query X's engine leg move" with the
+highest signal the box allows.  DuckDB noise sentinels bracket the run (so
+a reading can be rejected as contended before anyone argues from it), and
+each query gets warm pairs then N engine-alternating timed pairs, so a
+contention burst lands on both engines' samples of the SAME query (it
+cancels out of that query's ratio).  Per-query MEDIAN (burst-robust) with
+MAD (the spread) is reported rather than best-of.  This is the pattern that
+attributed mm_image_decode's r10 contract-bench drift to window load
+(BASELINE.md round-11 section).
 
-Usage: python tools/focused_ab.py [sf_dir] [rounds] query [query ...]
+Schedule: a DISCARDED global warm pass, then per query one untimed warm
+pair and N timed pairs.  Without the global pass the first queries pay JIT
+tiering + page-cache population for everyone (tpch_q1 measured 0.285 s at
+position 0 vs 0.166 s re-sampled at the schedule tail of the same
+process).  A full round-robin over all queries per round was measured and
+rejected: it reads ~40% worse for Spark across the board because each run
+re-faults the page cache and JIT locality the other queries just evicted,
+i.e. it measures locality loss, not engine speed.
+
+Usage: python tools/focused_ab.py [sf_dir] [rounds] [query ...]
+Session-conf hypotheses: PYSPARK_SUBMIT_ARGS="--conf k=v pyspark-shell"
+python tools/focused_ab.py ...  (read when the JVM launches, so static
+confs apply too; a key session.get_spark sets itself keeps get_spark's
+value); compare against a run without it.
 Prints one JSON line:
-  {"metric": "focused_ab", "queries": {q: {"spark": med, "spark_mad": ...,
-   "duckdb": med, "duckdb_mad": ...}}, "noise": {"sentinel_before": s,
+  {"metric": "focused_ab", "value": <spark median total>, "unit": "sec",
+   "duckdb_total": ..., "ratio_vs_duckdb": ...,
+   "queries": {q: {"spark": med, "spark_mad": ..., "duckdb": med,
+   "duckdb_mad": ...}}, "noise": {"sentinel_before": s,
    "sentinel_after": s}, "rounds": N, "sf": ...}
 
 Reading it: sentinels ≤ ~0.01 s = quiet window, readings usable; tens of
 ms = contended, re-run later.  MAD >> a leg's median move means the move
-is within noise.
+is within noise.  bench.py (best-of-5 hybrid) remains the driver contract.
 """
 
 from __future__ import annotations
@@ -33,8 +49,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _sentinel(sf_dir: str) -> float:
-    """Fixed tiny 1-thread DuckDB aggregation, timed cold — same probe as
-    bench.py's noise field, so readings are comparable across artifacts."""
+    """Fixed tiny 1-thread DuckDB aggregation, timed cold — a reading of
+    how contended the box is, comparable across this tool's artifacts."""
     import duckdb
 
     con = duckdb.connect()
@@ -58,6 +74,16 @@ def med_mad(xs: "list[float]") -> "tuple[float, float]":
     return m, statistics.median(abs(x - m) for x in xs)
 
 
+def best_of(fn, n: int = 3) -> float:
+    """Fastest of ``n`` timed calls of ``fn`` — the probes' per-arm reading."""
+    best = float("inf")
+    for _ in range(n):
+        t0 = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:]]
     sf_dir = "/root/testdata/sf0.1"
@@ -66,17 +92,16 @@ def main() -> None:
         sf_dir = args.pop(0)
     if args and args[0].isdigit():
         rounds = int(args.pop(0))
-    names = args
-    if not names:
-        sys.exit("usage: focused_ab.py [sf_dir] [rounds] query [query ...]")
 
     import duckdb
 
+    from bench import HEADLINE
     from steampipe_sqlite_spark.plans.registry import collect
     from steampipe_sqlite_spark.session import get_spark
 
     spark = get_spark("focused-ab")
     queries, oracles = collect()
+    names = args or [n for n in HEADLINE if n in oracles]
     missing = [n for n in names if n not in queries or n not in oracles]
     if missing:
         sys.exit(f"not registered (or no oracle): {missing}")
@@ -116,6 +141,7 @@ def main() -> None:
             samples[n]["duckdb"].append(duck_run(n))
 
     per_query = {}
+    s_total = d_total = 0.0
     for n in names:
         sm, smad = med_mad(samples[n]["spark"])
         dm, dmad = med_mad(samples[n]["duckdb"])
@@ -125,11 +151,17 @@ def main() -> None:
             "duckdb": round(dm, 3),
             "duckdb_mad": round(dmad, 3),
         }
+        s_total += sm
+        d_total += dm
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(
         json.dumps(
             {
                 "metric": "focused_ab",
+                "value": round(s_total, 3),
+                "unit": "sec",
+                "duckdb_total": round(d_total, 3),
+                "ratio_vs_duckdb": round(s_total / d_total, 3) if d_total else None,
                 "queries": per_query,
                 "noise": {
                     "sentinel_before": sentinel_before,

@@ -50,6 +50,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from tools.floorbound_scale_probe import build  # noqa: E402
+from tools.focused_ab import best_of  # noqa: E402
 import steampipe_sqlite_spark.tables as T  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
 
@@ -66,15 +67,6 @@ def _agg(df):
     )
 
 
-def _best_of(fn, n: int = 3) -> float:
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 100
 
@@ -87,7 +79,7 @@ def main() -> None:
     flat_df = T.load_table(spark, sf_dir, "events")
     rows = flat_df.count()
     flat_res = _agg(flat_df).collect()
-    flat_s = _best_of(lambda: _agg(T.load_table(spark, sf_dir, "events")).collect())
+    flat_s = best_of(lambda: _agg(T.load_table(spark, sf_dir, "events")).collect())
     flat_schema = flat_df.dtypes
 
     t0 = time.perf_counter()
@@ -97,7 +89,7 @@ def main() -> None:
     part_df = T.load_table(spark, sf_dir, "events")
     part_res_df = _agg(part_df)
     part_res = part_res_df.collect()
-    part_s = _best_of(lambda: _agg(T.load_table(spark, sf_dir, "events")).collect())
+    part_s = best_of(lambda: _agg(T.load_table(spark, sf_dir, "events")).collect())
     plan = part_res_df._jdf.queryExecution().executedPlan().toString()
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
 

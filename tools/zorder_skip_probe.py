@@ -53,6 +53,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from tools.floorbound_scale_probe import build  # noqa: E402
+from tools.focused_ab import best_of  # noqa: E402
 import steampipe_sqlite_spark.tables as T  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
 
@@ -77,15 +78,6 @@ def _two_col(df):
     )
 
 
-def _best_of(fn, n: int = 3) -> float:
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 100
 
@@ -99,7 +91,7 @@ def main() -> None:
 
     def run_arm(agg):
         res = agg(T.load_table(spark, sf_dir, "events")).collect()
-        best = _best_of(lambda: agg(T.load_table(spark, sf_dir, "events")).collect())
+        best = best_of(lambda: agg(T.load_table(spark, sf_dir, "events")).collect())
         return res, best
 
     flat_one_res, flat_one_s = run_arm(_one_col)
